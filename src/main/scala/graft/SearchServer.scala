@@ -5,17 +5,27 @@ import graft.index.IndexBuilder
 import graft.query.QueryEngine
 import graft.sources.CorpusSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.storage.StorageLevel
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** The reference's HTTP serving surface (reference server.go:55-103) as a
   * thin driver-side wrapper over [[graft.query.QueryEngine]]:
   * `GET /?q=&alg=&page=` answers a query with the algorithm registry
   * (unknown → BM25, reference server.go:39-53), paginates 5 results per
   * page (server.go:11,23-28) and renders an HTML SERP with prev/next
-  * links. JDK-only (`com.sun.net.httpserver`) — no new dependency; the
-  * per-request Spark work is exactly the CLI's DataFrame plan, the server
-  * itself is stateless beyond the prebuilt index bundle.
+  * links. JDK-only (`com.sun.net.httpserver`) — no new dependency.
+  *
+  * Requests run concurrently on a fixed pool with one thread per unit of
+  * the session's `defaultParallelism` (Spark schedules concurrent jobs
+  * from any thread); `stop()` shuts the pool down. Per request, the
+  * corpus-sized scoring plan (the CLI's DataFrame plan) runs on Spark;
+  * the page-sized rest — the ≤5 hits' documents, fetched with one scan,
+  * and their previews — runs on the driver. Beyond the prebuilt index
+  * bundle the server holds only its SERP and suggestion caches.
   */
 class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
     serpCacheTtlMs: Long = 60000L) {
@@ -39,11 +49,22 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
           e: java.util.Map.Entry[(String, String, Int), SerpEntry]): Boolean =
         size() > MaxSerpEntries
     })
+  private val hitCount = new AtomicLong()
   /** Requests answered from the SERP cache (observability + spec hook). */
-  @volatile private[graft] var cacheHits = 0L
+  private[graft] def cacheHits: Long = hitCount.get
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val pool = {
+    val n = new AtomicInteger()
+    Executors.newFixedThreadPool(
+      docs.sparkSession.sparkContext.defaultParallelism, (r: Runnable) => {
+        val t = new Thread(r, s"graft-serve-$boundPort-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+  server.setExecutor(pool)
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
@@ -103,7 +124,11 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
   /** Bound port (ephemeral when constructed with port = 0). */
   def boundPort: Int = server.getAddress.getPort
   def start(): Int = { server.start(); boundPort }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
 
   /** The query path shared by the handler and the spec: ranked results of
     * `page` (5/page) materialized in rank order, plus the total count.
@@ -114,59 +139,75 @@ class SearchServer(engine: QueryEngine, docs: DataFrame, port: Int = 0,
       val e = serpCache.get(key)
       if (e != null) {
         if (System.currentTimeMillis() - e.at <= serpCacheTtlMs) {
-          cacheHits += 1
+          hitCount.incrementAndGet()
           return (e.hits, e.total)
         }
         serpCache.remove(key)
       }
     }
-    // persist the ranked result so the scoring plan runs ONCE per
-    // request: count() materializes the cache, paginate+materialize read
-    // back the cached partitions instead of re-executing the query
-    val ranked = engine.byName(alg)(query)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = ranked.count()
-      val rows = engine.materialize(engine.paginate(ranked, page), docs)
-        .select("docId", "title", "url").collect()
-      // KWIC previews for the ≤5 page hits only: best covering window
-      // when a hit contains every query term, lead tokens otherwise
-      // (PositionalIndex.previewSnippets) — one bounded job per request
-      val terms = graft.analysis.Analyzer.tokenize(query)
-      val ids = rows.map(_.getAs[Long]("docId"))
-      val pageDocs = docs.where(org.apache.spark.sql.functions.col("docId")
-        .isin(ids.map(Long.box): _*))
-      val snippets: Map[Long, String] =
-        if (ids.isEmpty) Map.empty
-        else if (alg == "Grep" && query.nonEmpty)
-          // Grep hits are RAW substring matches (possibly crossing token
-          // boundaries), so the preview is the raw ±ctx-char excerpt
-          // with the needle bracketed — not the token-based KWIC window
-          graft.index.GramIndex.grepStats(pageDocs, "docId", "body",
-              query, ctx = 24)
-            .collect().map { r =>
-              val ex = r.getAs[String]("excerpt")
-              val i = ex.indexOf(query)
-              val marked =
-                if (i < 0) ex
-                else ex.substring(0, i) + "[" + query + "]" +
-                  ex.substring(i + query.length)
-              r.getLong(0) -> marked
-            }.toMap
-        else if (terms.isEmpty) Map.empty
-        else graft.index.PositionalIndex.previewSnippets(
-            pageDocs, terms, ctx = 3)
-          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val hits = rows.map { r =>
-        val id = r.getAs[Long]("docId")
-        Hit(id, r.getAs[String]("title"), r.getAs[String]("url"),
-          snippets.getOrElse(id, ""))
-      }
-      if (serpCacheTtlMs > 0)
-        serpCache.put(key,
-          SerpEntry(hits.toSeq, total, System.currentTimeMillis()))
-      (hits.toSeq, total)
-    } finally ranked.unpersist()
+    // corpus-sized scoring stays distributed; everything page-sized (the
+    // ≤5 hits, their documents, their previews) runs on the driver
+    val (total, pageDocs) = pinned(engine.byName(alg)(query)) { ranked =>
+      (ranked.count(), engine.materialize(engine.paginate(ranked, page), docs)
+        .select("docId", "title", "url", "body"))
+    }
+    // a local relation: this collect launches no job
+    val rows = pageDocs.collect()
+    val snippets: Map[Long, String] =
+      if (rows.isEmpty) Map.empty
+      else if (alg == "Grep" && query.nonEmpty)
+        // Grep hits are RAW substring matches (possibly crossing token
+        // boundaries), so the preview is the raw ±ctx-char excerpt
+        // with the needle bracketed — not the token-based KWIC window
+        graft.index.GramIndex.grepStats(pageDocs, "docId", "body",
+            query, ctx = 24)
+          .collect().map { r =>
+            val ex = r.getAs[String]("excerpt")
+            val i = ex.indexOf(query)
+            val marked =
+              if (i < 0) ex
+              else ex.substring(0, i) + "[" + query + "]" +
+                ex.substring(i + query.length)
+            r.getLong(0) -> marked
+          }.toMap
+      else
+        // KWIC previews: best covering window when a hit contains every
+        // query term, first match, else lead tokens
+        graft.index.PositionalIndex.previewSnippets(
+          rows.map(r => (r.getLong(0), r.getString(1), r.getString(3))).toSeq,
+          graft.analysis.Analyzer.tokenize(query), ctx = 3)
+    val hits = rows.toSeq.map { r =>
+      Hit(r.getLong(0), r.getString(1), r.getString(2),
+        snippets.getOrElse(r.getLong(0), ""))
+    }
+    if (serpCacheTtlMs > 0)
+      serpCache.put(key, SerpEntry(hits, total, System.currentTimeMillis()))
+    (hits, total)
+  }
+
+  // Requests whose ranked plans are equal (page 1 and page 2 of one
+  // query, or an unknown algorithm and its BM25 fallback) share ONE
+  // CacheManager entry, so a request may only unpersist the plan when no
+  // concurrent request still reads it.
+  private val pinCounts = scala.collection.mutable.HashMap.empty[LogicalPlan, Int]
+
+  /** Runs `f` over `ranked` persisted, so its scoring plan runs ONCE per
+    * request: the count materializes the cache and the page reads the
+    * cached partitions back.
+    */
+  private def pinned[A](ranked: DataFrame)(f: DataFrame => A): A = {
+    val plan = ranked.queryExecution.normalized.canonicalized
+    pinCounts.synchronized {
+      val n = pinCounts.getOrElse(plan, 0)
+      if (n == 0) ranked.persist(StorageLevel.MEMORY_AND_DISK)
+      pinCounts(plan) = n + 1
+    }
+    try f(ranked)
+    finally pinCounts.synchronized {
+      val n = pinCounts(plan) - 1
+      if (n > 0) pinCounts(plan) = n
+      else { pinCounts.remove(plan); ranked.unpersist() }
+    }
   }
 
   private val suggestCache = java.util.Collections.synchronizedMap(

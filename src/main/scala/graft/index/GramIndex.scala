@@ -505,8 +505,10 @@ object GramIndex {
     *     which case the run compiles to the OR over its expanded
     *     variants' gram conjunctions, capped at [[MaxRunVariants]]
     *     variants per run (past the cap the run splits — weaker but
-    *     sound). Negated classes, class escapes inside classes, and
-    *     wide ranges stay opaque atoms;
+    *     sound). A range endpoint may be escaped (`[\]-a]`). Negated
+    *     classes, class escapes inside classes, intersections (`&&`) and
+    *     wide ranges stay opaque atoms; a nested class (a Java union)
+    *     leaves the whole pattern to the full scan;
     *   - `x?` / `x*` / `x{0,…}` may be absent → contributes Any and
     *     breaks the run;
     *   - `x+` / `x{m,…}` guarantees ≥ m ≥ 1 adjacent occurrences →
@@ -567,29 +569,44 @@ object GramIndex {
     }
 
     /** Class body after `[`. Some(Some(cs)) = expandable to literal
-      * chars cs; Some(None) = valid but opaque; None = unterminated.
+      * chars cs; Some(None) = valid but opaque; None = unterminated, or
+      * a nested class (`[ab[cd]]` is a union in Java regex — left to the
+      * full scan).
       */
     def parseClass(): Option[Option[Seq[Char]]] = {
       var opaque = false
       if (i < n && pattern.charAt(i) == '^') { opaque = true; i += 1 }
+      // one class member: Some(Some(c)) a literal char, escaped or not;
+      // Some(None) an opaque escape (\d …); None past the end
+      def member(): Option[Option[Char]] =
+        if (i >= n) None
+        else if (pattern.charAt(i) != '\\') { i += 1; Some(Some(pattern.charAt(i - 1))) }
+        else if (i + 1 >= n) None
+        else {
+          val e = pattern.charAt(i + 1)
+          i += 2
+          Some(if (LiteralEscapes.indexOf(e) >= 0) Some(e) else None)
+        }
       val chars = Seq.newBuilder[Char]
       var first = true
       while (i < n && (pattern.charAt(i) != ']' || first)) {
-        val c = pattern.charAt(i)
-        if (c == '\\') {
-          if (i + 1 >= n) return None
-          val e = pattern.charAt(i + 1)
-          if (LiteralEscapes.indexOf(e) >= 0) chars += e
-          else opaque = true // \d etc. inside the class
-          i += 2
-        } else if (i + 2 < n && pattern.charAt(i + 1) == '-' &&
-            pattern.charAt(i + 2) != ']') {
-          val (lo, hi) = (c, pattern.charAt(i + 2))
-          if (lo <= hi && hi - lo < MaxClassExpand) chars ++= (lo to hi)
-          else opaque = true
-          i += 3
-        } else { chars += c; i += 1 }
         first = false
+        if (pattern.charAt(i) == '[') return None
+        // `&&` intersects: the class matches a subset of what it lists
+        if (pattern.startsWith("&&", i)) opaque = true
+        val lo = member().getOrElse(return None)
+        if (i + 1 < n && pattern.charAt(i) == '-' && pattern.charAt(i + 1) != ']') {
+          // a range; either endpoint may be escaped (`[\]-a]`, `[+-\]]`)
+          i += 1
+          (lo, member().getOrElse(return None)) match {
+            case (Some(l), Some(h)) if l <= h && h - l < MaxClassExpand =>
+              chars ++= (l to h)
+            case _ => opaque = true
+          }
+        } else lo match {
+          case Some(c) => chars += c
+          case None => opaque = true
+        }
       }
       if (i >= n) return None // unterminated class
       i += 1

@@ -249,21 +249,10 @@ object PositionalIndex {
     if (distinctTerms.isEmpty)
       return Seq.empty[(Long, String)].toDF("docId", "snippet")
     val toks = textPositions(docs, idCol, textCol)
-    renderWindows(toks, bestWindows(toks, distinctTerms), distinctTerms, ctx)
-  }
-
-  /** The render join shared by [[snippets]] and [[previewSnippets]]:
-    * expand each document's (win_start, win_end) by `ctx` positions,
-    * bracket the query terms, reassemble in position order.
-    */
-  private def renderWindows(toks: DataFrame, wins: DataFrame,
-      distinctTerms: Seq[String], ctx: Int): DataFrame = {
-    val marked =
-      (if (distinctTerms.isEmpty) col("term")
-       else when(col("term").isin(distinctTerms: _*),
-           concat(lit("["), col("term"), lit("]")))
-         .otherwise(col("term"))).as("word")
-    toks.join(wins, "docId")
+    val marked = when(col("term").isin(distinctTerms: _*),
+        concat(lit("["), col("term"), lit("]")))
+      .otherwise(col("term")).as("word")
+    toks.join(bestWindows(toks, distinctTerms), "docId")
       .where(col("pos").between(
         col("win_start") - ctx, col("win_end") + ctx))
       .select(col("docId"), col("pos"), marked)
@@ -276,41 +265,60 @@ object PositionalIndex {
   }
 
   /** Serving-layer previews over MODEL-FORM documents (docId, title,
-    * body, …): every input doc gets a snippet, by a three-step fallback —
-    * the best covering window when the doc contains ALL query terms
-    * ([[bestWindows]]); else the FIRST occurrence of any query term
-    * (a BM25/fuzzy hit need not contain every term, but a snippet should
-    * still show what matched); else the document's LEAD tokens. Query
-    * terms inside the rendered window are bracketed. The gated
-    * [[snippets]] op is deliberately partial (all-terms docs only); this
-    * is its total serving twin. Meant for page-sized `docs` relations
-    * (the ≤5 hits of a results page); token-free docs emit no row
-    * (render as no preview). Output: (docId, snippet).
+    * body), computed on the driver: a results page holds ≤ 5 documents,
+    * so rendering them locally costs microseconds where a DataFrame
+    * render costs several Spark jobs. Every input doc gets a snippet, by
+    * a three-step fallback — the best covering window when the doc
+    * contains ALL query terms (the [[bestWindows]] rule: tightest, ties
+    * → earliest); else the FIRST occurrence of any query term (a
+    * BM25/fuzzy hit need not contain every term, but a snippet should
+    * still show what matched); else the document's LEAD tokens. The
+    * window is widened by `ctx` positions either side and query terms
+    * inside it are bracketed, as in [[snippets]]. Positions are those of
+    * [[positionsStream]]: title tokens from 0, body tokens from |title| +
+    * [[FieldGapWidth]], so a window's context never leaks across the
+    * field gap. The gated [[snippets]] op is deliberately partial
+    * (all-terms docs only); this is its total serving twin. Token-free
+    * docs get no entry (render as no preview). Output: docId → snippet.
     */
-  def previewSnippets(docs: DataFrame, terms: Seq[String],
-      ctx: Int = 2): DataFrame = {
-    val distinctTerms = terms.distinct
-    val toks = positionsStream(docs)
-    // lead anchor = the doc's FIRST actual token (an empty title shifts
-    // body positions past the field gap, so lit(0) would miss it)
-    val lead = toks.groupBy(col("docId")).agg(min(col("pos")).as("__lead"))
-    val base = docs.select(col("docId")).join(lead, Seq("docId"), "left")
-    val wins =
-      if (distinctTerms.isEmpty)
-        base.select(col("docId"),
-          col("__lead").as("win_start"), col("__lead").as("win_end"))
-      else {
-        val anyFirst = toks.where(col("term").isin(distinctTerms: _*))
-          .groupBy(col("docId")).agg(min(col("pos")).as("__first"))
-        base.join(bestWindows(toks, distinctTerms), Seq("docId"), "left")
-          .join(anyFirst, Seq("docId"), "left")
-          .select(col("docId"),
-            coalesce(col("win_start"), col("__first"), col("__lead"))
-              .as("win_start"),
-            coalesce(col("win_end"), col("__first"), col("__lead"))
-              .as("win_end"))
+  def previewSnippets(docs: Seq[(Long, String, String)], terms: Seq[String],
+      ctx: Int = 2): Map[Long, String] = {
+    val distinctTerms = terms.distinct.toIndexedSeq
+    docs.flatMap { case (id, title, body) =>
+      preview(title, body, distinctTerms, ctx).map(id -> _)
+    }.toMap
+  }
+
+  /** One document's preview (see [[previewSnippets]]). */
+  private def preview(title: String, body: String,
+      distinctTerms: IndexedSeq[String], ctx: Int): Option[String] = {
+    // the same scanner as the TokensExpr column positionsStream uses;
+    // a null field tokenizes to nothing
+    val t = Analyzer.tokenizeFast(title)
+    val toks = (t.iterator.zipWithIndex.map { case (w, i) => (i.toLong, w) } ++
+      Analyzer.tokenizeFast(body).iterator.zipWithIndex.map { case (w, j) =>
+        (t.size + FieldGapWidth + j.toLong, w)
+      }).toIndexedSeq
+    if (toks.isEmpty) return None
+    val termIdx = distinctTerms.zipWithIndex.toMap
+    // tightest cover ending at each matching occurrence: from the latest
+    // prior position of every term to here (the coverSpans rule)
+    val last = Array.fill(distinctTerms.size)(-1L)
+    var best: Option[(Long, Long)] = None
+    for ((p, w) <- toks; i <- termIdx.get(w)) {
+      last(i) = p
+      if (last.forall(_ >= 0)) {
+        val start = last.min
+        if (best.forall { case (s, e) => p - start < e - s }) best = Some((start, p))
       }
-    renderWindows(toks, wins, distinctTerms, ctx)
+    }
+    val (winStart, winEnd) = best
+      .orElse(toks.collectFirst { case (p, w) if termIdx.contains(w) => (p, p) })
+      .getOrElse((toks.head._1, toks.head._1))
+    Some(toks.iterator
+      .filter { case (p, _) => p >= winStart - ctx && p <= winEnd + ctx }
+      .map { case (_, w) => if (termIdx.contains(w)) s"[$w]" else w }
+      .mkString(" "))
   }
 
   // ---------------------------------------------------------------------

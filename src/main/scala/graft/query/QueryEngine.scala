@@ -2,7 +2,7 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.index.IndexBundle
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The six query modes of the reference engine (searcher.go), composed as
@@ -768,25 +768,33 @@ final class QueryEngine(
     * must carry docId (+ optional score) and be RESULT-PAGE sized (top-k
     * or a paginate output — every call site), so collecting it is bounded.
     *
-    * The rank is pinned by collecting the ordered result ONCE and
-    * rebuilding it as a broadcast local relation with an explicit rank
-    * column — `collect` of an ordered plan preserves order by contract,
-    * unlike the previous `monotonically_increasing_id()`-after-orderBy
-    * capture, whose id assignment depends on physical partitioning and is
-    * fragile under AQE coalescing/re-planning. The docs join then probes
-    * the corpus with a broadcast hash join on the ≤page ids.
+    * Page-sized work stays on the driver: the ordered result is collected
+    * ONCE (`collect` of an ordered plan preserves order by contract), its
+    * documents are fetched with ONE pushed `docId IN (…)` scan, and the
+    * rank order is restored locally. The output has the shape of
+    * `ranked.join(docs, "docId")` in rank order (docId, ranked's other
+    * columns, docs' other columns; a ranked id absent from `docs` drops)
+    * and is a local relation, so collecting it launches no job.
     */
   def materialize(ranked: DataFrame, docs: DataFrame): DataFrame = {
-    val sp = ranked.sparkSession
-    val rows = ranked.collect()
-    val withRank = new java.util.ArrayList[org.apache.spark.sql.Row](rows.length)
-    rows.zipWithIndex.foreach { case (r, i) =>
-      withRank.add(org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i))
+    val rk = ranked.schema.fieldIndex("docId")
+    val dk = docs.schema.fieldIndex("docId")
+    def id(r: Row, k: Int): Long = r.getAs[Number](k).longValue
+    val page = ranked.collect().toSeq
+    val ids = page.map(id(_, rk)).distinct
+    val fetched =
+      if (ids.isEmpty) Map.empty[Long, Seq[Row]]
+      else docs.where(col("docId").isin(ids.map(Long.box): _*)).collect()
+        .toSeq.groupBy(id(_, dk))
+    def drop[A](xs: Seq[A], k: Int): Seq[A] = xs.patch(k, Nil, 1)
+    val rows = page.flatMap { r =>
+      fetched.getOrElse(id(r, rk), Nil).map(d =>
+        Row.fromSeq(r.get(rk) +: (drop(r.toSeq, rk) ++ drop(d.toSeq, dk))))
     }
-    val schema = ranked.schema
-      .add("__rank", org.apache.spark.sql.types.IntegerType, nullable = false)
-    val pinned = sp.createDataFrame(withRank, schema)
-    broadcast(pinned).join(docs, "docId").orderBy(col("__rank")).drop("__rank")
+    val schema = org.apache.spark.sql.types.StructType(ranked.schema(rk) +:
+      (drop(ranked.schema.fields.toSeq, rk) ++ drop(docs.schema.fields.toSeq, dk)))
+    ranked.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** SERP pagination: 5 results per page (reference server.go:11,23-28). */

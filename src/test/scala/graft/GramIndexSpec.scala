@@ -316,8 +316,9 @@ class GramIndexSpec extends AnyFunSuite {
     }
   }
 
-  private def bruteRegexIds(pattern: String): Set[Long] =
-    docs.where(coalesce(col("text"), lit("")).rlike(pattern))
+  private def bruteRegexIds(pattern: String,
+      in: org.apache.spark.sql.DataFrame = docs): Set[Long] =
+    in.where(coalesce(col("text"), lit("")).rlike(pattern))
       .collect().map(_.getLong(0)).toSet
 
   test("regex search ≡ brute rlike: accelerated subset and fallback patterns") {
@@ -335,12 +336,19 @@ class GramIndexSpec extends AnyFunSuite {
   }
 
   test("indexed regex ≡ in-memory ≡ brute") {
+    // texts whose class chars fall inside escaped-endpoint ranges:
+    // `[\]-a]` is the range ']'..'a' (holds '_'), `[+-\]]` is '+'..']'
+    // (holds ';'); nested classes are Java unions
+    val reDocs = docs.union(Seq((8L, "snake_case"), (9L, "ta;ble"),
+      (10L, "xcy")).toDF("doc_id", "text"))
     val dir = java.nio.file.Files.createTempDirectory("gramidx-re").toString
-    GramIndex.build(docs, "doc_id", "text", dir, k = 3, nShards = 4)
-    for (p <- Seq("read.*Frame", "spark.*parquet", "zz.*yy", "t[aA]ble"))
+    GramIndex.build(reDocs, "doc_id", "text", dir, k = 3, nShards = 4)
+    for (p <- Seq("read.*Frame", "spark.*parquet", "zz.*yy", "t[aA]ble",
+        "[\\]-a]", "[+-\\]]", "snake[\\]-a]case", "ta[+-\\]]ble",
+        "x[ab[cd]]y", "x[a-z&&c]y"))
       assert(
-        GramIndex.regexSearchIndexed(spark, dir, docs, "doc_id", "text", p)
-          .collect().map(_.getLong(0)).toSet == bruteRegexIds(p),
+        GramIndex.regexSearchIndexed(spark, dir, reDocs, "doc_id", "text", p)
+          .collect().map(_.getLong(0)).toSet == bruteRegexIds(p, reDocs),
         s"pattern '$p'")
   }
 

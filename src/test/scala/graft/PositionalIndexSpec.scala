@@ -399,21 +399,67 @@ class PositionalIndexSpec extends AnyFunSuite {
   }
 
   test("previewSnippets: cover → first-match → lead fallback tiers, total over hits") {
-    val docs = modelDocs(Seq(
+    val docs = Seq(
       (1L, "", "aa table scan bb"), // full cover → best window
       (2L, "", "xx yy scan zz ww"), // partial match → first occurrence
       (3L, "", "pp qq rr"), // no query terms → lead tokens
-      (4L, "", ""))) // token-free → no snippet row
+      (4L, "", "")) // token-free → no snippet
     val got = PositionalIndex.previewSnippets(docs, Seq("table", "scan"), ctx = 1)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(
       1L -> "aa [table] [scan] bb",
       2L -> "yy [scan] zz",
       3L -> "pp qq"))
     // empty query: lead tokens, nothing bracketed
     val lead = PositionalIndex.previewSnippets(docs, Seq.empty, ctx = 1)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(lead == Map(1L -> "aa table", 2L -> "xx yy", 3L -> "pp qq"))
+  }
+
+  test("previewSnippets: null fields tokenize to nothing; a cover may span the field gap") {
+    val got = PositionalIndex.previewSnippets(Seq(
+      (1L, null, "aa table scan bb"), // body positions start at 0 + gap
+      (2L, "table xx", "yy scan zz"), // only cover: title → body
+      (3L, "scan table", "table qq scan"), // tighter cover in the title
+      (4L, null, null)), // token-free → no snippet
+      Seq("table", "scan"), ctx = 1)
+    assert(got == Map(
+      1L -> "aa [table] [scan] bb",
+      2L -> "[table] xx yy [scan] zz",
+      // the context stops at the title's end: the gap holds no tokens
+      3L -> "[scan] [table]"))
+  }
+
+  test("previewSnippets ≡ snippets on docs holding every query term (seeded property)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val sp = spark
+    import sp.implicits._
+    val vocab = Seq("join", "scan", "table", "merge")
+    val text = Gen.resize(20, Gen.listOf(Gen.oneOf(vocab ++ Seq("Table", "x-y", "q1"))))
+      .map(_.mkString(" "))
+    val gen = for {
+      texts <- Gen.listOfN(6, text)
+      nTerms <- Gen.choose(1, 3)
+      terms <- Gen.listOfN(nTerms, Gen.oneOf(vocab))
+      ctx <- Gen.choose(0, 3)
+    } yield (texts, terms, ctx)
+    var compared = 0
+    val prop = Prop.forAll(gen) { case (texts, terms, ctx) =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      val want = PositionalIndex.snippets(docs.toDF("doc_id", "text"),
+          "doc_id", "text", terms, ctx)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val got = PositionalIndex.previewSnippets(
+        docs.map { case (i, t) => (i, "", t) }, terms, ctx)
+      val covering = docs.collect {
+        case (i, t) if terms.forall(graft.analysis.Analyzer.tokenize(t).contains) => i
+      }.toSet
+      compared += want.size
+      want.keySet == covering && got.filter(e => covering(e._1)) == want
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(30).withInitialSeed(Seed(20261017L)), prop)
+    assert(res.passed, res.status.toString)
+    assert(compared >= 30, s"only $compared covering docs generated")
   }
 
   test("phraseHits plan: ONE data exchange (votes co-partitioned by docId)") {

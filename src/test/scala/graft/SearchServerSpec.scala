@@ -170,6 +170,50 @@ class SearchServerSpec extends AnyFunSuite {
     assert(get("suggest?p=zzzz")._2.isEmpty)
   }
 
+  private def sendAll(port: Int, queries: Seq[String]): Seq[String] =
+    queries.map(q => client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/$q"))
+          .GET().build(),
+        HttpResponse.BodyHandlers.ofString()))
+      .map(_.get(300, java.util.concurrent.TimeUnit.SECONDS).body())
+
+  private def poolThreads(port: Int): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(s"graft-serve-$port-"))
+
+  test("concurrent requests across algorithms: each body equals the request made alone") {
+    val s = new SearchServer(engine, docs, port = 0, serpCacheTtlMs = 0L)
+    val port = s.start()
+    try {
+      val reqs = Seq(
+        "?q=matrix+communication+channel&alg=BM25",
+        // page 1 and page 2 rank with EQUAL plans, which share one
+        // persisted cache entry while both run
+        "?q=matrix+communication+channel&alg=BM25&page=2",
+        "?q=semantic+analysis&alg=Classic+TF-IDF",
+        "?q=qualitative+%7C%7C+semantics+%26%26+reliability+%7C%7C+technologies&alg=Boolean",
+        "?q=radi+techologies&alg=Fuzzy",
+        "?q=sem*t*c&alg=Wildcard")
+      val alone = reqs.map(q => sendAll(port, Seq(q)).head)
+      alone.foreach(b => assert(b.contains("results=") && !b.contains("internal error"), b))
+      assert(sendAll(port, reqs ++ reqs) == alone ++ alone)
+      assert(poolThreads(port).nonEmpty)
+    } finally s.stop()
+    assert(poolThreads(port).isEmpty, "stop() must end every pool thread")
+  }
+
+  test("SERP cache: the hit counter is exact under concurrent repeats") {
+    val s = new SearchServer(engine, docs, port = 0)
+    val port = s.start()
+    try {
+      val q = "?q=matrix+communication+channel&alg=Classic+TF-IDF"
+      val first = sendAll(port, Seq(q)).head
+      assert(s.cacheHits == 0L)
+      assert(sendAll(port, Seq.fill(48)(q)).forall(_ == first))
+      assert(s.cacheHits == 48L)
+    } finally s.stop()
+  }
+
   test("server.search == the CLI query path (byName + paginate + materialize)") {
     val (hits, total) = server.search("matrix communication channel", "BM25", 1)
     assert(total == 2)
