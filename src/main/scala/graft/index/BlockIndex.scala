@@ -71,8 +71,17 @@ object BlockIndex {
       StructField("maxDl", IntegerType), StructField("bytes", BinaryType)))
   }
 
-  private def emptyBlocks(spark: SparkSession): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), BlockSchema)
+  // The index's parquet tables with their declared schemas: every writer
+  // below conforms to them and every read passes them (TableIO), so
+  // opening a segment plans without a schema-inference job.
+  private[graft] val BlocksTable = TableIO.Table("blocks", BlockSchema,
+    partitions = new org.apache.spark.sql.types.StructType().add("shard", "int"))
+  private[graft] val DocLensTable = TableIO.Table("doclens",
+    new org.apache.spark.sql.types.StructType().add("docId", "long").add("len", "int"))
+  private[graft] val VocabTable = TableIO.Table("vocab",
+    new org.apache.spark.sql.types.StructType().add("term", "string"))
+  private[graft] val TombTable = TableIO.Table("tombstones",
+    new org.apache.spark.sql.types.StructType().add("docId", "long"))
 
   /** Shard directories that actually exist — a shard with no terms gets
     * no directory from partitionBy, and an out-of-vocabulary query term
@@ -89,12 +98,16 @@ object BlockIndex {
     * leaf, so a `term isin` filter above this still prunes row groups.
     */
   private def shardBlocksRelation(
-      spark: SparkSession, dir: String, shards: Seq[Int]): Option[DataFrame] =
-    segDirs(dir).flatMap { d =>
-      val paths = existingShardPaths(d, shards)
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", d).parquet(paths: _*))
-    }.reduceOption(_ unionByName _)
+      spark: SparkSession, segs: Seq[String], shards: Seq[Int]): Option[DataFrame] =
+    segs.flatMap(plainShardBlocks(spark, _, shards)).reduceOption(_ unionByName _)
+
+  /** The block relation for `shards` of ONE segment directory. */
+  private def plainShardBlocks(
+      spark: SparkSession, d: String, shards: Seq[Int]): Option[DataFrame] = {
+    val paths = existingShardPaths(d, shards)
+    if (paths.isEmpty) None
+    else Some(TableIO.read(spark, BlocksTable, d, paths, basePath = Some(d)))
+  }
 
   final case class Layout(blockSpan: Int, nShards: Int)
   final case class ShardEntry(shard: Int, rows: Long, terms: Long, blocks: Long, wallMs: Long)
@@ -131,7 +144,7 @@ object BlockIndex {
     * tokenizer scan) and [[compact]] (postings decoded from live blocks).
     */
   def blocksFromPostings(postings: DataFrame, layout: Layout): DataFrame = {
-    postings
+    val blocks = postings
       .withColumn("blockId", floor(col("docId") / layout.blockSpan).cast("long"))
       .withColumn("shard", pmod(xxhash64(col("term")), lit(layout.nShards)).cast("int"))
       .groupBy(col("shard"), col("term"), col("blockId"))
@@ -144,6 +157,9 @@ object BlockIndex {
         min(col("dl")).as("minDl"),
         max(col("dl")).as("maxDl"),
         VarByteAgg.column(col("docId"), col("tf"), col("dl")).as("bytes"))
+    // minDoc/maxDoc/maxTf/… follow the input's column types; the files
+    // must hold the declared ones whatever the caller's docId type
+    TableIO.conform(blocks, BlocksTable, "shard")
   }
 
   /** Build the index at `dir`. Resumable: shards already recorded in
@@ -166,8 +182,7 @@ object BlockIndex {
       overwrite: Boolean = false): Seq[ShardEntry] =
     buildPhysical(
       () => blocksOf(docs, layout),
-      () => docs.select(col("docId"),
-        Analyzer.wordCountCol(col("body")).cast("int").as("len")),
+      () => docs.select(col("docId"), Analyzer.wordCountCol(col("body")).as("len")),
       dir, layout, limitShards, shardGroupSize, overwrite)
 
   /** [[build]] from an explicit postings relation — the compaction path
@@ -178,7 +193,7 @@ object BlockIndex {
       dir: String, layout: Layout): Seq[ShardEntry] =
     buildPhysical(
       () => blocksFromPostings(postings, layout),
-      () => docLens.select(col("docId"), col("len").cast("int").as("len")),
+      () => docLens,
       dir, layout, limitShards = None, shardGroupSize = 8, overwrite = false)
 
   private def buildPhysical(
@@ -268,9 +283,10 @@ object BlockIndex {
       docLens: DataFrame, dir: String, layout: Layout,
       blocksOpt: Option[DataFrame] = None): Unit = {
     val spark = docLens.sparkSession
-    docLens.write.mode("overwrite").parquet(s"$dir/$DocLensName")
-    val Row(nDocs: Long, totalLen: Long, maxDocId: Long) = spark.read
-      .parquet(s"$dir/$DocLensName")
+    TableIO.conform(docLens, DocLensTable)
+      .write.mode("overwrite").parquet(s"$dir/$DocLensName")
+    val Row(nDocs: Long, totalLen: Long, maxDocId: Long) =
+      TableIO.read(spark, DocLensTable, dir, Seq(s"$dir/$DocLensName"))
       .agg(count(lit(1)), coalesce(sum(col("len").cast("long")), lit(0L)),
         coalesce(max(col("docId")), lit(-1L)))
       .head()
@@ -280,8 +296,7 @@ object BlockIndex {
     // block row per (term, blockId) — many× its vocabulary). Derived
     // from the build's cached blocks when available, else read back.
     blocksOpt.orElse(plainBlocks(spark, dir, layout))
-      .fold(spark.emptyDataFrame.withColumn("term", lit("")).limit(0))(
-        _.select(col("term")))
+      .fold(TableIO.empty(spark, VocabTable))(TableIO.conform(_, VocabTable))
       .distinct()
       .write.mode("overwrite").parquet(s"$dir/$VocabName")
     val vocab = readManifest(dir).map(_.terms).sum // terms are hash-disjoint across shards
@@ -293,11 +308,8 @@ object BlockIndex {
     * the root itself.
     */
   private def plainBlocks(
-      spark: SparkSession, dir: String, layout: Layout): Option[DataFrame] = {
-    val paths = existingShardPaths(dir, 0 until layout.nShards)
-    if (paths.isEmpty) None
-    else Some(spark.read.option("basePath", dir).parquet(paths: _*))
-  }
+      spark: SparkSession, dir: String, layout: Layout): Option[DataFrame] =
+    plainShardBlocks(spark, dir, 0 until layout.nShards)
 
   // ------------------------------------------------------------------
   // Manifest / stats (tiny driver-side JSON; no library dependency)
@@ -353,8 +365,33 @@ object BlockIndex {
   }
 
   def readStats(dir: String): (CorpusStats, Layout) = {
-    if (isSegmented(dir)) { val m = readSegments(dir); return (m.stats, m.layout) }
-    readStatsPlain(dir)
+    val st = readState(dir)
+    (st.stats, st.layout)
+  }
+
+  /** What one query needs of the committed state of `dir`, from ONE read
+    * of its commit file (`_segments.json` when segmented, else
+    * `_stats.json`): the segment directories, the combined stats, the
+    * layout, and the epoch keying the envelope cache — the commit's
+    * nonce, rewritten at every refresh / compaction commit and rebuild,
+    * falling back to the file's mtime for pre-nonce index dirs.
+    */
+  private final case class State(
+      segDirs: Seq[String], stats: CorpusStats, layout: Layout, epoch: Long)
+
+  private def readState(dir: String): State = {
+    val segmented = isSegmented(dir)
+    val p = if (segmented) s"$dir/$SegmentsName" else s"$dir/$StatsName"
+    val s = MetaIO.readString(p)
+    val epoch = """"nonce":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
+      .getOrElse(MetaIO.mtimeMillis(p))
+    if (segmented) {
+      val m = parseSegments(s)
+      State(segPaths(dir, m.segs), m.stats, m.layout, epoch)
+    } else {
+      val (stats, layout) = parseStats(s)
+      State(Seq(dir), stats, layout, epoch)
+    }
   }
 
   /** The single-segment `_stats.json` of `dir`, bypassing the segmented
@@ -362,8 +399,10 @@ object BlockIndex {
     * combined stats would otherwise be returned (and double-counted by a
     * second refresh's commit).
     */
-  private def readStatsPlain(dir: String): (CorpusStats, Layout) = {
-    val s = MetaIO.readString(s"$dir/$StatsName")
+  private def readStatsPlain(dir: String): (CorpusStats, Layout) =
+    parseStats(MetaIO.readString(s"$dir/$StatsName"))
+
+  private def parseStats(s: String): (CorpusStats, Layout) = {
     val re = """"(\w+)":(\d+)""".r
     val kv = re.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toMap
     (CorpusStats(kv("nDocs"), kv("vocabSize"), kv("totalLen")),
@@ -394,11 +433,15 @@ object BlockIndex {
     * non-segmented index).
     */
   private def segDirs(dir: String): Seq[String] =
-    if (!isSegmented(dir)) Seq(dir)
-    else readSegments(dir).segs.map(s => if (s == ".") dir else s"$dir/$s")
+    if (!isSegmented(dir)) Seq(dir) else segPaths(dir, readSegments(dir).segs)
 
-  def readSegments(dir: String): SegmentsMeta = {
-    val s = MetaIO.readString(s"$dir/$SegmentsName")
+  private def segPaths(dir: String, segs: Seq[String]): Seq[String] =
+    segs.map(s => if (s == ".") dir else s"$dir/$s")
+
+  def readSegments(dir: String): SegmentsMeta =
+    parseSegments(MetaIO.readString(s"$dir/$SegmentsName"))
+
+  private def parseSegments(s: String): SegmentsMeta = {
     val kv = """"(\w+)":(-?\d+)""".r.findAllMatchIn(s)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
     val segs = """"segs":\[([^\]]*)\]""".r.findFirstMatchIn(s).map(_.group(1))
@@ -507,12 +550,12 @@ object BlockIndex {
     */
   private def commitSegments(spark: SparkSession, dir: String,
       segs: Seq[String], layout: Layout, maxDocId: Long): SegmentsMeta = {
-    val dirs = segs.map(s => if (s == ".") dir else s"$dir/$s")
+    val dirs = segPaths(dir, segs)
     val perSeg = dirs.map(readStatsPlain) // NEVER the segmented view of "."
     val vocab = dirs
       .flatMap { d =>
         metaTablePath(d, VocabName, LegacyVocabName)
-          .map(p => spark.read.parquet(p).select(col("term")))
+          .map(p => TableIO.read(spark, VocabTable, d, Seq(p)))
           .orElse(plainBlocks(spark, d, layout).map(_.select(col("term"))))
       }
       .reduceOption(_ union _)
@@ -556,8 +599,9 @@ object BlockIndex {
     // and doc lengths both filter, so the rebuilt segment's completion
     // artifacts (nDocs, totalLen, vocabulary, df) are exactly those of a
     // cold build over the surviving corpus (spec-asserted byte-identical)
-    val postings = liveOnly(spark, dir, decodePostings(readBlocks(spark, dir)))
-    val docLens = liveOnly(spark, dir, readDocLens(spark, dir))
+    val live = liveFilter(spark, dir)
+    val postings = live(decodePostings(readBlocks(spark, dir)))
+    val docLens = live(readDocLens(spark, dir))
     buildFromPostings(postings, docLens, s"$dir/$gen", meta.layout)
     val committed = commitSegments(spark, dir, Seq(gen), meta.layout, meta.maxDocId)
     // a kill between the commit above and this clear re-runs the fold on
@@ -608,7 +652,7 @@ object BlockIndex {
       .map(s => s -> MetaIO.dirBytes(if (s == ".") dir else s"$dir/$s", skipTop))
       .sortBy { case (s, b) => (b, s) }
       .take(mf).map(_._1)
-    val vDirs = victims.map(s => if (s == ".") dir else s"$dir/$s")
+    val vDirs = segPaths(dir, victims)
     // deterministic name from the merged set's identity: a killed merge
     // re-runs into its own directory (build resumes per shard)
     val gen = "seg-tier-" + java.lang.Integer.toHexString(
@@ -622,14 +666,11 @@ object BlockIndex {
         import spark.implicits._
         Seq.empty[(String, Long, Int, Int)].toDF("term", "docId", "tf", "dl")
       }
-    val lensPaths = vDirs.map(d => metaTablePath(d, DocLensName, LegacyDocLensName))
+    val lens = vDirs.map(docLensOf(spark, _))
     val docLens =
-      if (lensPaths.forall(_.nonEmpty))
-        lensPaths.flatten
-          .map(p => spark.read.parquet(p).select(col("docId"), col("len")))
-          .reduce(_ union _)
+      if (lens.forall(_.nonEmpty)) lens.flatten.reduce(_ union _)
       else // pre-doclens victim: derive lengths from the decoded rows
-        postings.select(col("docId"), col("dl").cast("long").as("len")).distinct()
+        postings.select(col("docId"), col("dl").as("len")).distinct()
     buildFromPostings(postings, docLens, s"$dir/$gen", meta.layout)
     val committed = commitSegments(spark, dir,
       meta.segs.filterNot(victims.contains) :+ gen, meta.layout, meta.maxDocId)
@@ -714,10 +755,11 @@ object BlockIndex {
     * check and nothing else).
     */
   def tombstones(spark: SparkSession, dir: String): Option[DataFrame] =
-    readTombMeta(dir).filter(_.gens.nonEmpty).map { m =>
-      m.gens.map(g => spark.read.parquet(s"$dir/$g").select(col("docId")))
-        .reduce(_ unionByName _)
-    }
+    readTombMeta(dir).filter(_.gens.nonEmpty).map(tombRelation(spark, dir, _))
+
+  private def tombRelation(spark: SparkSession, dir: String, m: TombMeta): DataFrame =
+    m.gens.map(g => TableIO.read(spark, TombTable, s"$dir/$g", Seq(s"$dir/$g")))
+      .reduce(_ unionByName _)
 
   /** Mark documents DELETED without touching committed segment data —
     * Lucene's tombstone model, the shape a 100 TB index needs (a
@@ -753,13 +795,13 @@ object BlockIndex {
     genName.map(g => s"tomb-$g").foreach { gen =>
       if (cur.gens.contains(gen)) return cur
     }
-    val b = ids.agg(min(col("docId")), max(col("docId")), count(lit(1))).head()
+    val rows = TableIO.conform(ids, TombTable) // any integral docId type
+    val b = rows.agg(min(col("docId")), max(col("docId")), count(lit(1))).head()
     if (b.getLong(2) == 0L) return cur
     val gen = genName.map(g => s"tomb-$g")
       .getOrElse(s"tomb-${b.getLong(0)}-${b.getLong(1)}-${b.getLong(2)}")
     if (cur.gens.contains(gen)) return cur
-    ids.select(col("docId").cast("long").as("docId"))
-      .write.mode("overwrite").parquet(s"$dir/$gen")
+    rows.write.mode("overwrite").parquet(s"$dir/$gen")
     val m = TombMeta(cur.gens :+ gen, cur.nIds + b.getLong(2))
     writeTombMeta(dir, m)
     m
@@ -775,29 +817,32 @@ object BlockIndex {
       .foreach(n => MetaIO.deleteIfExists(s"$dir/$n", recursive = true))
   }
 
-  /** Filter a relation with a `docId` column down to live (untombstoned)
-    * docs. No tombstones ⇒ the relation is returned untouched (zero plan
-    * change); a small committed delete set broadcasts; past
-    * [[BroadcastTombCap]] the planner chooses (compact instead of
-    * carrying that per query).
+  /** The filter of relations with a `docId` column down to live
+    * (untombstoned) docs. The tombstone metadata is read, and the
+    * tombstone relation built, once for every relation the filter is
+    * applied to. No tombstones ⇒ identity (zero plan change); a small
+    * committed delete set broadcasts; past [[BroadcastTombCap]] the
+    * planner chooses (compact instead of carrying that per query).
     */
-  private def liveOnly(spark: SparkSession, dir: String, rel: DataFrame): DataFrame =
-    readTombMeta(dir).filter(_.gens.nonEmpty).fold(rel) { m =>
-      val t = tombstones(spark, dir).get.distinct()
-      rel.join(if (m.nIds <= BroadcastTombCap) broadcast(t) else t,
-        Seq("docId"), "left_anti")
+  private def liveFilter(spark: SparkSession, dir: String): DataFrame => DataFrame =
+    readTombMeta(dir).filter(_.gens.nonEmpty) match {
+      case None => identity
+      case Some(m) =>
+        val t0 = tombRelation(spark, dir, m).distinct()
+        val t = if (m.nIds <= BroadcastTombCap) broadcast(t0) else t0
+        rel => rel.join(t, Seq("docId"), "left_anti")
     }
+
+  /** The doc-length table of ONE segment directory, if it has one. */
+  private def docLensOf(spark: SparkSession, d: String): Option[DataFrame] =
+    metaTablePath(d, DocLensName, LegacyDocLensName)
+      .map(p => TableIO.read(spark, DocLensTable, d, Seq(p)))
 
   /** The materialized doc-length relation across all segments. */
   private[graft] def readDocLens(spark: SparkSession, dir: String): DataFrame =
-    segDirs(dir)
-      .flatMap(d => metaTablePath(d, DocLensName, LegacyDocLensName))
-      .map(p => spark.read.parquet(p).select(col("docId"), col("len")))
+    segDirs(dir).flatMap(docLensOf(spark, _))
       .reduceOption(_ union _)
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("docId", "len")
-      }
+      .getOrElse(TableIO.empty(spark, DocLensTable))
 
   /** The docIds the index currently ANSWERS FOR: present in a committed
     * segment's doc-length table and not tombstoned. This is the
@@ -808,7 +853,7 @@ object BlockIndex {
     * posting blocks touched.
     */
   def liveDocIds(spark: SparkSession, dir: String): DataFrame =
-    liveOnly(spark, dir, readDocLens(spark, dir).select(col("docId")))
+    liveFilter(spark, dir)(readDocLens(spark, dir).select(col("docId")))
 
   /** Driver-local twin of the build's `pmod(xxhash64(term), nShards)` —
     * same XXH64 with Spark's default seed 42, so query planning computes
@@ -822,9 +867,11 @@ object BlockIndex {
   }
 
   /** All block rows (partition column `shard` recovered from the path). */
-  def readBlocks(spark: SparkSession, dir: String): DataFrame =
-    shardBlocksRelation(spark, dir, 0 until readStats(dir)._2.nShards)
-      .getOrElse(emptyBlocks(spark))
+  def readBlocks(spark: SparkSession, dir: String): DataFrame = {
+    val st = readState(dir)
+    shardBlocksRelation(spark, st.segDirs, 0 until st.layout.nShards)
+      .getOrElse(TableIO.empty(spark, BlocksTable))
+  }
 
   /** Decode a filtered block relation back to (term, docId, tf, dl). */
   def decodePostings(blocks: DataFrame): DataFrame =
@@ -857,18 +904,14 @@ object BlockIndex {
     // tombstoned docs are filtered out of the postings relation, so every
     // query mode the bundle serves excludes them; stats/df stay those of
     // the last build (Lucene's stale-until-compact semantics, see delete)
-    val decoded = liveOnly(spark, dir, decodePostings(blocks))
+    val decoded = liveFilter(spark, dir)(decodePostings(blocks))
     val postings = decoded.select(col("term"), col("docId"), col("tf"))
     // prefer the materialized doc-length parquet (written at build time);
     // decode-and-distinct over the whole index is only the fallback for
     // pre-doclens indexes
-    val docLensPaths = segDirs(dir)
-      .flatMap(d => metaTablePath(d, DocLensName, LegacyDocLensName))
-    val docLens =
-      if (docLensPaths.nonEmpty)
-        docLensPaths.map(p => spark.read.parquet(p).select(col("docId"), col("len")))
-          .reduce(_ unionByName _)
-      else decoded.select(col("docId"), col("dl").as("len")).distinct()
+    val docLens = segDirs(dir).flatMap(docLensOf(spark, _))
+      .reduceOption(_ unionByName _)
+      .getOrElse(decoded.select(col("docId"), col("dl").as("len")).distinct())
     val termStats = blocks.groupBy(col("term"))
       .agg(sum(col("n").cast("long")).as("df"), max(col("maxTf")).as("maxTf"))
     val kgramIndex = {
@@ -936,27 +979,13 @@ object BlockIndex {
   private val envCacheMtime = scala.collection.concurrent.TrieMap.empty[String, Long]
   private val EnvCacheCap = 1000000
 
-  /** Epoch identifying the index state in `dir`: the nonce of
-    * `_segments.json` for a segmented root (rewritten at every refresh /
-    * compaction commit), else the build nonce written by [[writeStats]],
-    * falling back to the file's mtime for pre-nonce index dirs. The file
-    * is a handful of bytes, so reading it per query costs the same
-    * syscall the mtime stat did.
+  /** Record `mtime` (the [[State.epoch]] just read) as the current epoch
+    * of `dir`, evicting the dir's stale entries when a rebuild changed it
+    * (they can never hit again), and clearing everything at a hard size
+    * cap — the cache cannot grow without bound in a long-lived query
+    * driver.
     */
-  private def statsMtime(dir: String): Long = {
-    val p = if (isSegmented(dir)) s"$dir/$SegmentsName" else s"$dir/$StatsName"
-    val s = MetaIO.readString(p)
-    """"nonce":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      .getOrElse(MetaIO.mtimeMillis(p))
-  }
-
-  /** Current stats mtime for `dir`, evicting the dir's stale entries when
-    * a rebuild changed it (they can never hit again), and clearing
-    * everything at a hard size cap — the cache cannot grow without bound
-    * in a long-lived query driver.
-    */
-  private def envCacheEpoch(dir: String): Long = {
-    val mtime = statsMtime(dir)
+  private def envCacheEpoch(dir: String, mtime: Long): Long = {
     val prev = envCacheMtime.put(dir, mtime)
     if (prev.exists(_ != mtime))
       envCache.keys.filter(k => k._1 == dir && k._2 != mtime).foreach(envCache.remove)
@@ -968,7 +997,8 @@ object BlockIndex {
       spark: SparkSession, dir: String, query: String, k: Int,
       k1: Double = 0.9, b: Double = 0.4): DataFrame = {
     import spark.implicits._
-    val (stats, layout) = readStats(dir)
+    val st = readState(dir)
+    val (stats, layout) = (st.stats, st.layout)
     val toks = Analyzer.tokenize(query)
     val emptyOut = Seq.empty[(Long, Double)].toDF("docId", "score")
     if (toks.isEmpty) return emptyOut
@@ -978,14 +1008,14 @@ object BlockIndex {
     // shard of each term — driver-local xxhash64, no Spark job
     val shards = terms.map(shardOf(_, layout.nShards)).distinct
 
-    val termBlocks0 = shardBlocksRelation(spark, dir, shards)
+    val termBlocks0 = shardBlocksRelation(spark, st.segDirs, shards)
     if (termBlocks0.isEmpty) return emptyOut
     val termBlocks = termBlocks0.get.where(col("term").isin(terms: _*))
 
     // ---- per-term envelope: the only unconditional collect, ≤ |terms|
     // rows regardless of df (bytes column never read). Memoized per
     // (dir, term): the job runs only for terms not seen before ----
-    val mtime = envCacheEpoch(dir)
+    val mtime = envCacheEpoch(dir, st.epoch)
     val uncached = terms.filterNot(t => envCache.contains((dir, mtime, t)))
     if (uncached.nonEmpty) {
       val fresh = termBlocks.where(col("term").isin(uncached: _*))
@@ -1010,6 +1040,7 @@ object BlockIndex {
     val avgdl = stats.avgdl
 
     val idfDf = broadcast(terms.map(t => (t, idf(t), qcnt(t))).toDF("term", "idf", "qcnt"))
+    val live = liveFilter(spark, dir) // shared by the θ probe and the final top-k
     /** Shuffle-light scoring: the ONE shuffle moves COMPRESSED blocks
       * keyed by blockId (a stop-word query ships ~df/blockSpan block rows,
       * not df decoded postings). docId determines blockId, so after that
@@ -1019,7 +1050,7 @@ object BlockIndex {
       * per-partition TakeOrdered + driver merge of nPartitions·k rows.
       */
     def scoreRel(rel: DataFrame): DataFrame =
-      liveOnly(spark, dir, decodePostingsWithBlock(
+      live(decodePostingsWithBlock(
         rel.select(col("term"), col("blockId"), col("bytes"))
           .repartition(col("blockId"))))
         .join(idfDf, "term")
@@ -1121,7 +1152,8 @@ object BlockIndex {
       k1: Double = 0.9, b: Double = 0.4,
       prune: Option[Boolean] = None): DataFrame = {
     import spark.implicits._
-    val (stats, layout) = readStats(dir)
+    val st = readState(dir)
+    val (stats, layout) = (st.stats, st.layout)
     val emptyOut = Seq.empty[(String, Long, Double, Int)]
       .toDF("query", "docId", "score", "rank")
     // (query, term, qcnt) — duplicate tokens double-count (reference
@@ -1133,7 +1165,7 @@ object BlockIndex {
     if (qTerms.isEmpty) return emptyOut
     val terms = qTerms.map(_._2).distinct
     val termBlocks0 = shardBlocksRelation(
-      spark, dir, terms.map(shardOf(_, layout.nShards)).distinct)
+      spark, st.segDirs, terms.map(shardOf(_, layout.nShards)).distinct)
     if (termBlocks0.isEmpty) return emptyOut
     val termBlocks = termBlocks0.get.where(col("term").isin(terms: _*))
     // df per term computed in-plan (no driver envelope needed: the batch
@@ -1146,6 +1178,7 @@ object BlockIndex {
           log(10.0, lit(stats.vocabSize.toDouble) / col("df"))).otherwise(0.0))
     val qDf = broadcast(qTerms.toDF("query", "term", "qcnt"))
     val avgdl = stats.avgdl
+    val live = liveFilter(spark, dir)
 
     // same shuffle-light shape as bm25TopK's scoreRel: one exchange of
     // compressed blocks by blockId, then a co-located aggregation
@@ -1165,7 +1198,7 @@ object BlockIndex {
           termBlocks.where(col("blockId").isin(pairs.map(_._2).distinct: _*))
         case _ => termBlocks
       }
-      val base = liveOnly(spark, dir, decodePostingsWithBlock(
+      val base = live(decodePostingsWithBlock(
           blocksRel.select(col("term"), col("blockId"), col("bytes"))
             .repartition(col("blockId"))))
         .join(broadcast(termDf.select(col("term"), col("idf"))), "term")

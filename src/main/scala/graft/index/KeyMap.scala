@@ -26,6 +26,10 @@ object KeyMap {
 
   val MetaName = "_keymap.json"
 
+  /** A `kseg-*` segment's declared schema (see [[TableIO]]). */
+  private[graft] val SegTable = TableIO.Table("keymap",
+    new org.apache.spark.sql.types.StructType().add("key", "string").add("docId", "long"))
+
   final case class Meta(segs: Seq[String])
 
   def exists(dir: String): Boolean = MetaIO.exists(s"$dir/$MetaName")
@@ -55,20 +59,17 @@ object KeyMap {
     val gen = s"kseg-$marker"
     val meta = readMeta(dir)
     if (meta.segs.contains(gen)) return
-    rows.select(col("key").cast("string").as("key"),
-        col("docId").cast("long").as("docId"))
+    TableIO.conform(rows, SegTable)
       .write.mode("overwrite").parquet(s"$dir/$gen")
     writeMeta(dir, Meta(meta.segs :+ gen))
   }
 
   /** Every committed (key, docId) row, including retired versions. */
-  def rows(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def rows(spark: SparkSession, dir: String): DataFrame =
     readMeta(dir).segs
-      .map(seg => spark.read.parquet(s"$dir/$seg"))
+      .map(seg => TableIO.read(spark, SegTable, s"$dir/$seg", Seq(s"$dir/$seg")))
       .reduceOption(_ union _)
-      .getOrElse(Seq.empty[(String, Long)].toDF("key", "docId"))
-  }
+      .getOrElse(TableIO.empty(spark, SegTable))
 
   /** Live (key, docId) rows: committed map rows whose docId the block
     * index currently ANSWERS FOR ([[BlockIndex.liveDocIds]]: present in
@@ -123,7 +124,7 @@ object KeyMap {
     // deterministic name (the house compact rule): a crash-then-retry
     // rewrites the same generation instead of leaking an orphan
     val gen = s"kseg-compact-$ceiling-${meta.segs.size}"
-    live.write.mode("overwrite").parquet(s"$dir/$gen")
+    TableIO.conform(live, SegTable).write.mode("overwrite").parquet(s"$dir/$gen")
     writeMeta(dir, Meta(Seq(gen)))
     // sweep everything the new meta doesn't reference — the folded
     // segments and any orphan a killed earlier compact left behind

@@ -389,11 +389,33 @@ object PositionalIndex {
         back.agg(max(col("docId"))).head().getLong(0)
       }
     MetaIO.writeAtomic(metaPath(dir),
-      s"""{"nShards":$nShards,"maxDocId":$maxDocId}""".getBytes("UTF-8"))
+      (s"""{"nShards":$nShards,"maxDocId":$maxDocId,""" +
+        s""""format":$FormatVersion,"fieldGap":$FieldGapWidth}""").getBytes("UTF-8"))
   }
 
+  /** Format stamp of `_posmeta.json`. Version 1 separates title and body
+    * by [[FieldGapWidth]] empty positions; earlier builds used a
+    * 1-position gap and wrote no stamp. A sidecar of another format is
+    * neither read nor appended to: the gapped-pattern soundness bound
+    * (`pattern.size <= FieldGapWidth`) holds only for the current gap,
+    * and a refresh would mix both conventions in one index.
+    */
+  private[index] val FormatVersion = 1
+
+  /** The shard count of the plain sidecar at `dir`, after checking its
+    * format stamp — every read and refresh path goes through here.
+    */
   def readNShards(dir: String): Int = {
     val s = MetaIO.readString(metaPath(dir))
+    def stamp(k: String) =
+      s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
+    val (format, gap) = (stamp("format"), stamp("fieldGap"))
+    if (!format.contains(FormatVersion) || !gap.contains(FieldGapWidth))
+      throw new IllegalStateException(
+        s"positional sidecar ${metaPath(dir)} has format " +
+          s"${format.getOrElse("none")} and field gap ${gap.getOrElse("none")}; " +
+          s"this build reads format $FormatVersion with field gap $FieldGapWidth " +
+          "— rebuild the sidecar")
     """"nShards"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
       .map(_.group(1).toInt)
       .getOrElse(sys.error(s"malformed ${metaPath(dir)}: $s"))
@@ -486,6 +508,8 @@ object PositionalIndex {
       genName: Option[String] = None): PosSegmentsMeta = {
     val spark = newDocs.sparkSession
     val meta = segMeta(spark, dir)
+    // never append a segment of this format to segments of another
+    if (isSegmented(dir)) segDirs(dir).foreach(readNShards)
     genName.map(g => s"pseg-$g").foreach { gen =>
       if (isSegmented(dir) && readSegments(dir).segs.contains(gen))
         return readSegments(dir)

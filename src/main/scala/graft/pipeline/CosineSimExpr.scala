@@ -22,16 +22,17 @@ import org.apache.spark.sql.types._
   * loop. Here the three accumulations run in one primitive while-loop
   * and the projection stays inside whole-stage codegen.
   *
-  * Semantics (bit-identical to the Column twin on well-formed input —
-  * same left-fold accumulation order, same `sqrt(sa) * sqrt(sb)`
+  * Semantics (bit-identical to the Column twin on every NaN-free input
+  * — same left-fold accumulation order, same `sqrt(sa) * sqrt(sb)`
   * grouping, same zero-norm guard):
   *   - both arrays non-null, equal length, no null elements →
   *     `d / (sqrt(Σa²)·sqrt(Σb²))`, or 0.0 when either norm is 0;
   *   - a null ARRAY or a null ELEMENT → 0.0 (the HOF twin's null dot /
   *     null norm falls through `when(nn > 0, …).otherwise(0.0)`);
-  *   - length mismatch → NULL (zip_with pads with nulls → null dot
-  *     while both norms stay positive, so the `when` branch is taken
-  *     with a null numerator).
+  *   - length mismatch → NULL when both norms (each over its own whole
+  *     array) are positive: zip_with pads with nulls → null dot, and the
+  *     `when` branch is taken with a null numerator. When either norm is
+  *     0 or null the guard falls through first → 0.0.
   */
 case class CosineSimExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -97,14 +98,19 @@ object CosineSimExpr {
         org.apache.spark.sql.GraftColumnBridge.expression(b)))
 
   /** Static entry point used by both eval and the generated code.
-    * Returns null (boxed) ONLY on length mismatch; 0.0 for null arrays,
-    * null elements, or zero norms — see the class doc for why.
+    * Returns null (boxed) ONLY on a length mismatch of two arrays with
+    * positive norms; 0.0 for null arrays, null elements, or zero norms —
+    * see the class doc for why.
     */
   def compute(a: ArrayData, b: ArrayData, aFloat: Boolean,
       bFloat: Boolean): java.lang.Double = {
     if (a == null || b == null) return 0.0d
     val n = a.numElements()
-    if (b.numElements() != n) return null
+    if (b.numElements() != n) {
+      val (sa, sb) = (sumSq(a, aFloat), sumSq(b, bFloat))
+      return if (sa >= 0 && sb >= 0 && math.sqrt(sa) * math.sqrt(sb) > 0) null
+        else 0.0d
+    }
     var d = 0.0
     var sa = 0.0
     var sb = 0.0
@@ -120,5 +126,20 @@ object CosineSimExpr {
     }
     val nn = math.sqrt(sa) * math.sqrt(sb)
     if (nn > 0) d / nn else 0.0d
+  }
+
+  /** Σx² in index order — −1 for an array holding a null element,
+    * standing in for the HOF norm's null.
+    */
+  private def sumSq(a: ArrayData, isFloat: Boolean): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) return -1.0
+      val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      s += x * x
+      i += 1
+    }
+    s
   }
 }

@@ -646,4 +646,154 @@ class BlockIndexSpec extends AnyFunSuite {
     assert(BlockIndex.readBlocks(spark, d).count() == 0)
     assert(BlockIndex.bm25TopK(spark, d, "anything", 5).count() == 0)
   }
+
+  // ------------------------------------------------------------------
+  // Declared-schema reads: no Spark job to open a segment, loud on drift
+  // ------------------------------------------------------------------
+
+  /** Runs `body` and returns, for each Spark job it launched on this
+    * thread, the SQL execution id it ran under (None for a job outside
+    * any query execution, such as a parquet schema-inference job).
+    */
+  private def jobsOf[T](body: => T): (T, Seq[Option[String]]) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.probe"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          seen.add(Option(e.properties.getProperty("spark.sql.execution.id")))
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, seen.toArray.toSeq.map(_.asInstanceOf[Option[String]]))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("opening segments runs no Spark job: a cached-envelope call launches none, WAND only its collects") {
+    val sp = spark
+    import sp.implicits._
+    val d = tmpDir("blockidx-jobs").toString
+    BlockIndex.build(docs.where(col("docId") < 200), d, layout)
+    BlockIndex.refresh(docs.where(col("docId") >= 200 && col("docId") < 350), d)
+    BlockIndex.refresh(docs.where(col("docId") >= 350), d)
+    val dead = Set(3L, 5L, 250L, 400L)
+    BlockIndex.delete(Seq(3L, 5L).toDF("docId"), d)
+    BlockIndex.delete(Seq(250L, 400L).toDF("docId"), d)
+    assert(BlockIndex.readSegments(d).segs.size == 3)
+    assert(BlockIndex.readTombMeta(d).get.gens.size == 2)
+    val (tail, head) = (("table", 100), ("spark join fast window", 3))
+    // warm-up: caches both queries' envelopes
+    for ((q, k) <- Seq(tail, head)) BlockIndex.bm25TopK(spark, d, q, k).collect()
+
+    val (tailDf, tailJobs) = jobsOf(BlockIndex.bm25TopK(spark, d, tail._1, tail._2))
+    assert(tailJobs.isEmpty, s"a cached-envelope call launched ${tailJobs.size} jobs")
+    val (tailRows, tailCollect) = jobsOf(tailDf.collect())
+    assert(tailCollect.nonEmpty && tailCollect.forall(_.nonEmpty) &&
+      tailCollect.flatten.distinct.size == 1, tailCollect.toString)
+
+    val (headDf, headJobs) = jobsOf(BlockIndex.bm25TopK(spark, d, head._1, head._2))
+    assert(BlockIndex.lastDriverMetaRows > 0, "the head query must take the θ-pruning path")
+    assert(headJobs.forall(_.nonEmpty), s"jobs outside a query execution: $headJobs")
+    // at most the top-blocks, θ-probe and survivor collects
+    val collects = headJobs.flatten.distinct.size
+    assert(collects >= 1 && collects <= 3, s"$collects query executions in the call")
+
+    val headIds = headDf.collect().map(_.getLong(0))
+    assert(headIds.length == head._2 && !headIds.exists(dead))
+    assert(tailRows.nonEmpty && !tailRows.map(_.getLong(0)).exists(dead))
+  }
+
+  test("declared schemas equal the written ones after build, upsert, delete, compactions and keymap commits") {
+    import graft.index.{KeyMap, TableIO}
+    import graft.streaming.StreamOps
+    val sp = spark
+    import sp.implicits._
+    val d = tmpDir("blockidx-schemas").toString
+    val k = tmpDir("blockidx-schemas-keymap").toString
+    val base = docs.where(col("docId") < 120)
+      .withColumn("url", concat(lit("u"), col("docId")))
+    val seen = scala.collection.mutable.Set.empty[String]
+    def same(t: TableIO.Table, path: String): Unit = {
+      val written = spark.read.parquet(path).schema.map(f => f.name -> f.dataType)
+      assert(written == t.schema.map(f => f.name -> f.dataType),
+        s"table '${t.name}' at $path")
+      seen += t.name
+    }
+    def checkAll(step: String): Unit = withClue(s"after $step: ") {
+      val segs =
+        if (BlockIndex.isSegmented(d)) BlockIndex.readSegments(d).segs else Seq(".")
+      for (seg <- segs.map(s => if (s == ".") d else s"$d/$s")) {
+        (0 until layout.nShards).map(s => s"$seg/shard=$s")
+          .filter(p => Files.exists(java.nio.file.Paths.get(p)))
+          .foreach(same(BlockIndex.BlocksTable, _))
+        same(BlockIndex.DocLensTable, s"$seg/${BlockIndex.DocLensName}")
+        same(BlockIndex.VocabTable, s"$seg/${BlockIndex.VocabName}")
+      }
+      BlockIndex.readTombMeta(d).toSeq.flatMap(_.gens)
+        .foreach(g => same(BlockIndex.TombTable, s"$d/$g"))
+      KeyMap.readMeta(k).segs.foreach(g => same(KeyMap.SegTable, s"$k/$g"))
+    }
+    BlockIndex.build(base, d, layout)
+    // int docIds (here and in the delete below): the writers must still
+    // store the declared long column
+    KeyMap.commit(base.select(col("url").as("key"), col("docId").cast("int")), k, "base")
+    checkAll("build + KeyMap.commit")
+    def upsert(batch: Long, ids: Seq[Int]): Unit =
+      StreamOps.indexUpsertBatch(
+        ids.map(i => (s"t$i", s"fresh body $i table join", s"u$i"))
+          .toDF("title", "body", "url"),
+        batch, d, layout, Seq("url"), k)
+    upsert(1L, Seq(1, 2, 500))
+    upsert(2L, Seq(3, 501))
+    upsert(3L, Seq(4, 502))
+    checkAll("indexUpsertBatch")
+    BlockIndex.delete(Seq(7, 8).toDF("docId"), d)
+    checkAll("delete")
+    assert(BlockIndex.compactTiered(d, maxSegments = 2).segs.exists(_.startsWith("seg-tier-")))
+    checkAll("compactTiered")
+    BlockIndex.compact(d)
+    KeyMap.compact(spark, k, d)
+    checkAll("compact + KeyMap.compact")
+    assert(seen == Set("blocks", "doclens", "vocab", "tombstones", "keymap"), seen)
+  }
+
+  test("format drift fails loudly, naming the table and the column") {
+    val sp = spark
+    import sp.implicits._
+    val tiny = Seq((1L, "", "alpha beta alpha", ""), (2L, "", "beta gamma", ""))
+      .toDF("docId", "title", "body", "url")
+    val lay = BlockIndex.Layout(blockSpan = 64, nShards = 2)
+    val good = tmpDir("blockidx-drift-good").toString
+    BlockIndex.build(tiny, good, lay)
+    // a copy whose block files were rewritten by `drift`
+    def drifted(name: String)(drift: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): String = {
+      val d = tmpDir(s"blockidx-drift-$name").toString
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(good), new java.io.File(d))
+      for (s <- 0 until lay.nShards; p = s"$good/shard=$s"
+           if Files.exists(java.nio.file.Paths.get(p)))
+        drift(spark.read.parquet(p)).write.mode("overwrite").parquet(s"$d/shard=$s")
+      d
+    }
+    val cases = Seq(
+      drifted("no-mintf")(_.drop("minTf")) -> Seq("'blocks'", "'minTf'", "missing"),
+      drifted("n-bigint")(_.withColumn("n", col("n").cast("long"))) ->
+        Seq("'blocks'", "'n'", "bigint"))
+    assert(BlockIndex.bm25TopK(spark, good, "alpha", 5).count() == 1)
+    for ((d, words) <- cases) {
+      val e = intercept[IllegalStateException] {
+        BlockIndex.bm25TopK(spark, d, "alpha", 5).collect()
+      }
+      words.foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+      intercept[IllegalStateException](BlockIndex.readBlocks(spark, d))
+    }
+  }
 }

@@ -868,6 +868,28 @@ class PipelineSpec extends AnyFunSuite {
       .head()
     assert(edge.getDouble(0) == 0.0)
     assert(edge.isNullAt(1))
+    // length mismatch: NULL only while both norms are positive; a zero
+    // norm or a null element on either side falls through the guard to
+    // 0.0 in both formulations
+    val mismatched = Seq(
+      "array(1.0, 2.0)" -> "array(1.0, 2.0, 3.0)",
+      "array(0.0, 0.0)" -> "array(1.0, 2.0, 3.0)",
+      "array(1.0, 2.0)" -> "array(0.0, 0.0, 0.0)",
+      "array(0.0)" -> "array(0.0, 0.0)",
+      "array()" -> "array(1.0)",
+      "array(1.0, null)" -> "array(1.0, 2.0, 3.0)",
+      "array(1.0, 2.0)" -> "array(null, 2.0, 3.0)")
+    val mis = mismatched.map { case (a, b) =>
+      val r = spark.range(1)
+        .select(expr(s"cast($a as array<float>)").as("a"),
+          expr(s"cast($b as array<float>)").as("b"))
+        .select(Similarity.cosine(col("a"), col("b")),
+          Similarity.cosineHof(col("a"), col("b")))
+        .head()
+      assert(Option(r.get(0)) == Option(r.get(1)), s"$a vs $b")
+      Option(r.get(0))
+    }
+    assert(mis.head.isEmpty && mis.tail.forall(_.contains(0.0)), mis.toString)
     // and the ANN plan stays native: no interpreted HOF nodes
     val plan = Similarity.bruteForceTopK(
       df.select(col("id").as("query_id"), col("a").as("embedding")).limit(2),

@@ -500,4 +500,33 @@ class PositionalIndexSpec extends AnyFunSuite {
     // and a phrase whose terms' shards are absent returns empty, no error
     assert(PositionalIndex.phraseSearch(spark, dir, "", 10).count() == 0)
   }
+
+  test("_posmeta.json stamps format and field gap; reads and refreshes refuse another format") {
+    val dir = Files.createTempDirectory("graft-pos-stamp").toString
+    PositionalIndex.build(modelDocs(Seq((1L, "needle", "table x"),
+      (2L, "", "needle table"))), dir, nShards = 2)
+    val meta = java.nio.file.Paths.get(dir, "_posmeta.json")
+    val stamped = new String(Files.readAllBytes(meta), "UTF-8")
+    assert(stamped.contains("\"format\":1") && stamped.contains("\"fieldGap\":100"), stamped)
+    def search() = PositionalIndex.phraseSearch(spark, dir, "needle table", 10)
+      .collect().map(_.getLong(0)).toSeq
+    assert(search() == Seq(2L))
+    val drifted = Seq(
+      stamped.replace(",\"format\":1,\"fieldGap\":100", ""), // pre-stamp sidecar
+      stamped.replace("\"fieldGap\":100", "\"fieldGap\":1"),
+      stamped.replace("\"format\":1", "\"format\":2"))
+    def refuses(delta: DataFrame): Unit = drifted.foreach { bad =>
+      Files.write(meta, bad.getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](search())
+      assert(e.getMessage.contains("field gap"), e.getMessage)
+      intercept[IllegalStateException](PositionalIndex.refresh(delta, dir))
+      Files.write(meta, stamped.getBytes("UTF-8"))
+    }
+    refuses(modelDocs(Seq((3L, "", "needle table"))))
+    // a segmented root checks every committed segment before appending
+    PositionalIndex.refresh(modelDocs(Seq((3L, "", "needle table"))), dir)
+    assert(PositionalIndex.isSegmented(dir) && search() == Seq(2L, 3L))
+    refuses(modelDocs(Seq((4L, "", "needle table"))))
+    assert(PositionalIndex.readSegments(dir).segs.size == 2)
+  }
 }
